@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its metrics as one JSON line.
 
-    python3 perfbench/run.py --workload sql_interactive --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload interactive --seed 1 --seconds 8 --trace 0
 
 Workloads and their settings are in perfbench/spec.json; metric names are
 in BENCHMARK.json at the repo root. With ``--trace 0`` the last stdout line
@@ -92,14 +92,13 @@ def host_env(state: str, driver_mem: str) -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
-    # a fixed, pre-touched heap: the JVM's resident size no longer depends
-    # on when G1 chose to grow the heap, so peak RSS moves only with what
-    # lives outside the heap (metaspace, code cache, threads, direct
-    # buffers) and on the Python side
+    # the serial collector grows the heap only when live data needs it: G1
+    # (and Parallel's adaptive policy) size it from pause and GC-time goals,
+    # which spread peak RSS 25% between runs of the same code
     os.environ["SPARK_LAUNCHER_OPTS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         f"--driver-java-options '-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
-        f"-Xms{driver_mem} -XX:+AlwaysPreTouch' pyspark-shell"
+        "-XX:+UseSerialGC' pyspark-shell"
     )
 
 
@@ -184,19 +183,22 @@ class Bench:
             "raw_setup_s": total["s"],
         })
 
-    def restart(self, eventlog_dir: str | None = None) -> None:
-        """Stop the SparkContext and set up again in the same JVM."""
+    def restart(self, eventlog_dir: str | None) -> None:
+        """Stop the SparkContext and set up again in the same JVM, with the
+        uncompressed event log written to ``eventlog_dir`` (None: off)."""
         from pyspark import SparkContext
 
-        self.spark.stop()
+        self.spark.stop()  # also closes an open event log
         props = SparkContext._jvm.java.lang.System
-        if eventlog_dir:
+        props.setProperty("spark.eventLog.enabled", str(eventlog_dir is not None).lower())
+        if eventlog_dir is not None:
             os.makedirs(eventlog_dir, exist_ok=True)
-            props.setProperty("spark.eventLog.enabled", "true")
             props.setProperty("spark.eventLog.compress", "false")
             props.setProperty("spark.eventLog.rolling.enabled", "false")
             props.setProperty("spark.eventLog.dir", "file://" + eventlog_dir)
         self.setup()
+        if self.stream is not None:
+            self.stream.rebind(self.spark, self.tables["events"])
 
     def shutdown(self) -> None:
         """Stop Spark and wait for the JVM (and its Python workers) to exit."""
@@ -217,12 +219,14 @@ class Bench:
                 proc.kill()
                 proc.wait()
 
-    def peak_rss_mb(self) -> float:
+    def peak_rss_mb(self) -> dict:
+        """Peak resident MB of the runner's Python process and the JVM."""
         from pyspark import SparkContext
 
-        py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-        jvm_kb = vm_hwm_kb(SparkContext._gateway.proc.pid)
-        return (py_kb + jvm_kb) / 1024.0
+        return {
+            "python": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0,
+            "jvm": vm_hwm_kb(SparkContext._gateway.proc.pid) / 1024.0,
+        }
 
     # ---------------- query workloads ----------------
 
@@ -350,29 +354,32 @@ class Bench:
         log(f"corpus {self.fingerprint} ready")
         self.tracer = Tracer(bool(args.trace))
         self.setup()
-        self.restart()
-        self.restart()
         self.prepare()
-        log(f"set-ups {[round(x['setup_s'], 2) for x in self.setups]}, checks ready")
-        # warm-up (JIT, codegen cache, file cache): checked, not timed
+        log(f"set-up {self.setups[0]['setup_s']:.2f}s, checks ready")
+        # warm-up (JIT, codegen cache, file cache): checked, not timed; in a
+        # traced run the first pass that each window drops warms up as well
         self.tracer.enabled = False
-        self.window(0, -1)
-        log("warm-up pass done")
+        self.window(0, -2, 1 if args.trace else self.cfg["warm_up_passes"])
+        log("warm-up done")
         if not args.trace:
             passes = self.window(args.seconds, 0, self.cfg["min_passes"])
             self.finish()
             self.passes = passes
             return self.end_to_end(passes)
-        plain = self.window(args.seconds / 2.0, 0)
+        # untraced, traced, untraced: the JIT keeps speeding passes up, and
+        # comparing the traced window with both untraced ones cancels that
+        # trend. Each window drops its first pass, which is still warming up
+        # (the JIT, or the new SparkContext after a restart).
+        plain = self.window(args.seconds, 0, 2)[1:]
         log_dir = os.path.join(self.run_dir, "eventlog")
         self.tracer.enabled = True
-        self.restart(eventlog_dir=log_dir)
-        if self.stream is not None:
-            self.stream.rebind(self.spark, self.tables["events"])
-        passes = self.window(args.seconds / 2.0, 1000)
+        self.restart(log_dir)
+        passes = self.window(args.seconds, 1000, 2)[1:]
+        self.tracer.enabled = False
+        self.restart(None)
+        plain += self.window(args.seconds, 2000, 2)[1:]
         self.finish()
         self.passes = plain + passes
-        self.spark.stop()  # closes the event log
         metrics = self.per_layer(passes, plain, eventlog_counters(log_dir))
         self.tracer.write(
             os.path.join(self.run_dir, "spans.json"),
@@ -392,21 +399,19 @@ class Bench:
     def end_to_end(self, passes: list[dict]) -> dict:
         lat = [r["latency"] for p in passes for r in p["recs"] if "latency" in r]
         return {
-            "setup_s": statistics.median(s["setup_s"] for s in self.setups),
+            "setup_s": self.setups[0]["setup_s"],
             "pass_s": statistics.median(p["wall"] for p in passes),
             "op_geomean_s": statistics.geometric_mean(lat),
             "op_tail_mean_s": tail_mean(lat, TAIL_FRAC),
-            "peak_rss_mb": self.peak_rss,
+            "peak_rss_mb": sum(self.peak_rss.values()),
         }
 
     def per_layer(self, passes: list[dict], plain: list[dict], counters: dict) -> dict:
-        def setup_median(key: str) -> float:
-            return statistics.median(s[key] for s in self.setups[:3])
-
+        cold = self.setups[0]
         m: dict[str, float] = {
-            "session.get_session_s": setup_median("get_session_s"),
-            "plans.load_all_s": setup_median("load_all_s"),
-            "registry.load_table_s": setup_median("load_table_s"),
+            "session.get_session_s": cold["get_session_s"],
+            "plans.load_all_s": cold["load_all_s"],
+            "registry.load_table_s": cold["load_table_s"],
             "corpus.generate_s": self.gen_s,
         }
         for mod in QUERY_MODULES:
@@ -501,7 +506,7 @@ def main(argv: list[str] | None = None) -> int:
     record = {
         **result, "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "fingerprint": bench.fingerprint, "failures": bench.failures,
-        "setups": bench.setups,
+        "setups": bench.setups, "peak_rss_mb": bench.peak_rss,
         "passes": [
             {"wall": p["wall"], "raw_wall": p["raw_wall"], "steal_factor": p["steal_factor"],
              "ops": [[r["op"], r.get("latency")] for r in p["recs"]]}

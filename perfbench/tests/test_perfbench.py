@@ -19,8 +19,6 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
     DECLARED = json.load(fh)
-with open(os.path.join(ROOT, "perfbench", "spec.json")) as fh:
-    SPEC = json.load(fh)
 
 
 def run_bench(workload: str, trace: int = 0, patch: str = "", cwd: str = ROOT) -> dict | None:
@@ -54,7 +52,7 @@ def assert_metrics(result: dict, declared: list[dict]) -> None:
         assert isinstance(m["value"], (int, float))
 
 
-@pytest.mark.parametrize("workload", sorted(SPEC["workloads"]))
+@pytest.mark.parametrize("workload", [w["name"] for w in DECLARED["workloads"]])
 def test_smoke_prints_every_end_to_end_metric(workload):
     result = run_bench(workload)
     assert result is not None
@@ -97,7 +95,7 @@ def test_corrupted_expected_hash_counts_as_failure():
         "    return d\n"
         "check.oracle_digests = _bad"
     )
-    result = run_bench("sql_interactive", patch=patch)
+    result = run_bench("interactive", patch=patch)
     assert result is not None
     assert result["failed"] > 0 and not result["correct"]
 
@@ -113,7 +111,7 @@ def test_skipped_upsert_in_model_counts_as_failure():
         "        _orig(self, *a)\n"
         "lakehouse.Model.upsert = _skip_first"
     )
-    result = run_bench("lakehouse", patch=patch)
+    result = run_bench("interactive", patch=patch)
     assert result is not None
     assert result["failed"] > 0 and not result["correct"]
 
@@ -135,7 +133,7 @@ def test_exception_in_executed_plan_counts_as_failure():
         "    return specs\n"
         "plans.load_all = _load_all"
     )
-    result = run_bench("sql_interactive", patch=patch)
+    result = run_bench("interactive", patch=patch)
     assert result is not None
     assert result["failed"] > 0 and not result["correct"]
 
