@@ -71,9 +71,5 @@ def query(name: str, oracle: str | None = None, note: str = "") -> Callable[[Que
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module (idempotent) and return the registry."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            # Module not built yet (incremental waves) — skip silently.
-            pass
+        importlib.import_module(mod)
     return QUERIES

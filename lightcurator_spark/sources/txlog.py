@@ -11,11 +11,13 @@ whole stores; S11 compacts; none of them had isolation or history).
 
 Guarantees (each one tested):
 - **Atomic commits**: a commit is visible iff its log entry exists;
-  the entry is written to a temp name and published with a
-  PUT-IF-ABSENT `os.link` (atomic on POSIX; fails loudly on an
-  existing version instead of replacing it), so readers never see a
-  half-commit and racing committers never lose an update — the loser
-  retries at the next version.
+  every log verb publishes through `TxLogTable._publish`, which
+  writes the entry to a temp name and links it into place
+  PUT-IF-ABSENT (`_put_if_absent` — `os.link` is atomic on POSIX and
+  fails loudly on an existing version instead of replacing it), so
+  readers never see a half-commit and racing committers never lose
+  an update — the loser re-runs its conflict checks and retries at
+  the next version.
 - **Snapshot isolation**: a reader resolves the file list ONCE; later
   commits (including removes) cannot change rows already resolved —
   remove = log entry, not file deletion.
@@ -104,6 +106,52 @@ from lightcurator_spark.plans.registry import query
 from lightcurator_spark.registry import load_table
 
 from lightcurator_spark.scratch import SCRATCH_ROOT as _SCRATCH
+
+
+def _put_if_absent(path: str, obj) -> bool:
+    """Publish `obj` as JSON at `path` only if nothing is there yet —
+    the one put-if-absent primitive under log entries, checkpoints and
+    txn decisions. The JSON goes to a dot-prefixed temp name beside
+    `path` (invisible to every log listing) and is hard-linked into
+    place: the link is atomic on POSIX and fails on an existing
+    destination, where os.rename would silently replace it. The temp
+    is always unlinked. Returns False when another writer already
+    holds `path`."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def _write_dv_sidecar(
+    table_path: str, files: list[str], keys: list, dv_key: str | None
+) -> dict:
+    """Write (file, key) deletion-vector pairs as ONE driver-side
+    pyarrow sidecar under `<table_path>/_dv/` and return the entry's
+    `dv` payload: the sidecar path plus per-file key counts (the log
+    holds counts only). For the metadata verbs that re-home DV pairs
+    (branch merge/rebase, clone), whose pair counts are delta-sized;
+    MoR commits write their sidecar distributed (`_mor_build_dv`)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rel = os.path.join("_dv", f"{uuid.uuid4().hex[:12]}.parquet")
+    os.makedirs(os.path.join(table_path, "_dv"), exist_ok=True)
+    pq.write_table(
+        pa.table({"__dv_file": files, "__dv_key": keys}),
+        os.path.join(table_path, rel),
+    )
+    counts: dict[str, int] = {}
+    for f in files:
+        counts[f] = counts.get(f, 0) + 1
+    return {"key": dv_key, "sidecar": rel, "files": counts}
 
 
 class _LogState(NamedTuple):
@@ -240,6 +288,85 @@ class TxLogTable:
             df = df.withColumn(c, F.lit(None).cast(have[c]))
         return df, auto_add
 
+    def _publish(self, build, checkpoint: bool = True) -> int | None:
+        """The commit protocol — every log verb publishes through here.
+        Each attempt takes the next version and calls `build(version)`,
+        which runs the verb's optimistic-concurrency re-checks against
+        the log as it stands NOW (raising on a conflict) and returns the
+        entry's keys beyond version/ts (`add`/`remove` default to []),
+        or None to abort without publishing. The entry is then published
+        put-if-absent: a committer that loses the version race retries
+        at the next version, re-running `build`, or one commit would be
+        silently lost (Delta-style optimistic concurrency). With
+        `checkpoint`, the winner also writes the checkpoint on the
+        `checkpoint_interval` cadence.
+
+        Retry bound: a committer loses a round only when ANOTHER commit
+        landed (system-wide progress is guaranteed), so the bound must
+        exceed any realistic burst of concurrent commits — 16 was too
+        tight for the 8-writer stress test's worst case."""
+        for _ in range(256):
+            version = self._next_version()
+            extra = build(version)
+            if extra is None:
+                return None
+            entry = {
+                "version": version,
+                "ts": time.time(),
+                "add": [],
+                "remove": [],
+                **extra,
+            }
+            if _put_if_absent(
+                os.path.join(self.log_dir, f"{version}.json"), entry
+            ):
+                if checkpoint and (version + 1) % self.checkpoint_interval == 0:
+                    self._write_checkpoint(version)
+                return version
+        raise RuntimeError(
+            f"txlog commit lost the version race 256 times at {self.path}"
+        )
+
+    def _write_files(
+        self,
+        df: DataFrame,
+        prefix: str,
+        stats_cols: list[str] | None = None,
+        bloom_cols: list[str] | None = None,
+    ) -> tuple[list[str], dict]:
+        """Write `df` (PHYSICAL column names) as parquet files under a
+        fresh `<prefix>-<hex>/` directory of the table and return
+        (sorted relative file paths, their `_entry_stats`)."""
+        data_dir = os.path.join(self.path, f"{prefix}-{uuid.uuid4().hex[:8]}")
+        df.write.parquet(data_dir)
+        files = sorted(
+            os.path.join(os.path.basename(data_dir), f)
+            for f in os.listdir(data_dir)
+            if f.endswith(".parquet")
+        )
+        return files, self._entry_stats(files, stats_cols, bloom_cols)
+
+    def _entry_stats(
+        self,
+        files: list[str],
+        stats_cols: list[str] | None,
+        bloom_cols: list[str] | None = None,
+    ) -> dict:
+        """file → footer stats for the LOGICAL `stats_cols` (plus a
+        `__bloom` filter over `bloom_cols`), or {} when neither is
+        asked for — the per-file payload of an entry's `stats` key."""
+        if not (stats_cols or bloom_cols):
+            return {}
+        scols = self._to_physical_names(stats_cols) if stats_cols else []
+        bcols = self._to_physical_names(bloom_cols) if bloom_cols else []
+        out = {}
+        for f in files:
+            full = os.path.join(self.path, f)
+            out[f] = self._file_stats(full, scols)
+            if bcols:
+                out[f]["__bloom"] = self._file_bloom(full, bcols)
+        return out
+
     def commit(
         self,
         df: DataFrame,
@@ -273,78 +400,56 @@ class TxLogTable:
         contents and may replace its schema (Delta's overwriteSchema
         shape); enforcement binds appends, where old and new files
         must union."""
+        return self._commit(df, mode, stats_cols, merge_schema, bloom_cols)
+
+    def _commit(
+        self,
+        df: DataFrame,
+        mode: str,
+        stats_cols: list[str] | None,
+        merge_schema: bool = False,
+        bloom_cols: list[str] | None = None,
+        txn_id: str | None = None,
+    ) -> int | None:
+        """The append/overwrite body shared by `commit` and
+        `commit_txn` — one place for schema enforcement, the data write
+        and the publish re-checks. With `txn_id`, the entry is tagged
+        and the publish aborts (None) if that id is already in the
+        ledger."""
         assert mode in ("append", "overwrite")
         df = self._to_physical(df)
         auto_add: dict = {}
-        st = self._fold_state()
         if mode == "append":
-            df, auto_add = self._enforce_append_schema(df, merge_schema, st)
-        if stats_cols:
-            stats_cols = self._to_physical_names(stats_cols)
-        if bloom_cols:
-            bloom_cols = self._to_physical_names(bloom_cols)
-        version = self._next_version()
-        data_dir = os.path.join(self.path, f"v{version}-{uuid.uuid4().hex[:8]}")
-        df.write.parquet(data_dir)
-        added = [
-            os.path.join(os.path.basename(data_dir), f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        ]
-        stats = {}
-        if stats_cols or bloom_cols:
-            for f in added:
-                fs = self._file_stats(
-                    os.path.join(self.path, f), stats_cols or []
-                )
-                if bloom_cols:
-                    fs["__bloom"] = self._file_bloom(
-                        os.path.join(self.path, f), bloom_cols
-                    )
-                stats[f] = fs
-        removed = self.active_files() if mode == "overwrite" else []
-        # publish with PUT-IF-ABSENT (os.link fails on an existing
-        # destination), not os.rename (which silently replaces): two
-        # concurrent committers racing to the same version must make
-        # the loser FAIL and retry at the next version, or one commit
-        # is silently lost — the optimistic-concurrency step that makes
-        # Delta-style log commits atomic (review finding, round 6).
-        # retry bound: a committer loses a round only when ANOTHER
-        # commit landed (system-wide progress is guaranteed), so the
-        # bound must exceed any realistic burst of concurrent commits
-        # — 16 was too tight for the 8-writer stress test's worst case
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": sorted(added),
-                "remove": sorted(removed),
+            df, auto_add = self._enforce_append_schema(
+                df, merge_schema, self._fold_state()
+            )
+        added, stats = self._write_files(
+            df, f"v{self._next_version()}", stats_cols, bloom_cols
+        )
+
+        def build(_v: int) -> dict | None:
+            if txn_id is not None and txn_id in self.committed_txns():
+                # a racer with the same txn won while we were writing;
+                # our data files become unreferenced orphans (harmless,
+                # vacuum-invisible) and the batch is NOT duplicated
+                return None
+            entry: dict = {
+                "add": added,
+                "remove": sorted(self.active_files())
+                if mode == "overwrite"
+                else [],
             }
+            if txn_id is not None:
+                entry["txn"] = txn_id
             if stats:
                 entry["stats"] = stats
             if auto_add:
                 # merge_schema widening rides IN the data commit — one
                 # atomic entry, never a schema commit racing a write
                 entry["add_column"] = auto_add
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-                if mode == "overwrite":
-                    removed = self.active_files()
-        raise RuntimeError(
-            f"txlog commit lost the version race 256 times at {self.path}"
-        )
+            return entry
+
+        return self._publish(build)
 
     def commit_replace(
         self,
@@ -363,58 +468,23 @@ class TxLogTable:
         CURRENT active set at publish time — if a racing commit
         already removed one of the files, this commit fails loudly
         rather than resurrecting or double-removing it."""
-        df = self._to_physical(df)
-        if stats_cols:
-            stats_cols = self._to_physical_names(stats_cols)
-        version = self._next_version()
-        data_dir = os.path.join(self.path, f"v{version}-{uuid.uuid4().hex[:8]}")
-        df.write.parquet(data_dir)
-        added = [
-            os.path.join(os.path.basename(data_dir), f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        ]
-        stats = (
-            {
-                f: self._file_stats(os.path.join(self.path, f), stats_cols)
-                for f in added
-            }
-            if stats_cols
-            else {}
+        added, stats = self._write_files(
+            self._to_physical(df), f"v{self._next_version()}", stats_cols
         )
-        for _ in range(256):
+
+        def build(_v: int) -> dict:
             missing = set(remove) - set(self.active_files())
             if missing:
                 raise ValueError(
                     f"commit_replace lost the conflict race: {sorted(missing)} "
                     "are no longer active (a concurrent commit removed them)"
                 )
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": sorted(added),
-                "remove": sorted(remove),
-            }
+            entry = {"add": added, "remove": sorted(remove)}
             if stats:
                 entry["stats"] = stats
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog commit_replace lost the version race 256 times at "
-            f"{self.path}"
-        )
+            return entry
+
+        return self._publish(build)
 
     def restore(self, version: int) -> int:
         """RESTORE TO VERSION as a FORWARD commit (Delta RESTORE):
@@ -433,34 +503,12 @@ class TxLogTable:
                 f"cannot restore to v{version}: {len(missing)} of its "
                 f"files were vacuumed (e.g. {missing[0]})"
             )
-        new_version = self._next_version()
-        for _ in range(256):
+
+        def build(_v: int) -> dict:
             cur = set(self.active_files())
-            entry = {
-                "version": new_version,
-                "ts": time.time(),
-                "add": sorted(want - cur),
-                "remove": sorted(cur - want),
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{new_version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(
-                    tmp, os.path.join(self.log_dir, f"{new_version}.json")
-                )
-                os.unlink(tmp)
-                if (new_version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(new_version)
-                return new_version
-            except FileExistsError:
-                os.unlink(tmp)
-                new_version = self._next_version()
-        raise RuntimeError(
-            f"txlog restore lost the version race 256 times at {self.path}"
-        )
+            return {"add": sorted(want - cur), "remove": sorted(cur - want)}
+
+        return self._publish(build)
 
     def committed_txns(self, version: int | None = None) -> set[str]:
         """Transaction ids already committed at `version` — the
@@ -484,67 +532,14 @@ class TxLogTable:
         ledger, DO NOTHING and return None (the replayed micro-batch
         case — Structured Streaming re-runs a batch after a crash
         between sink write and source checkpoint); otherwise commit
-        like `commit` with the entry tagged `txn`. The ledger re-checks
-        after every lost version race, so two racers with the same
-        txn_id cannot both land: the loser re-reads the log, finds the
-        winner's tag, and returns None instead of double-committing."""
+        like `commit` — appends schema-enforced the same way — with
+        the entry tagged `txn`. The ledger re-checks after every lost
+        version race, so two racers with the same txn_id cannot both
+        land: the loser re-reads the log, finds the winner's tag, and
+        returns None instead of double-committing."""
         if txn_id in self.committed_txns():
             return None
-        assert mode in ("append", "overwrite")
-        df = self._to_physical(df)
-        if stats_cols:
-            stats_cols = self._to_physical_names(stats_cols)
-        version = self._next_version()
-        data_dir = os.path.join(self.path, f"v{version}-{uuid.uuid4().hex[:8]}")
-        df.write.parquet(data_dir)
-        added = [
-            os.path.join(os.path.basename(data_dir), f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        ]
-        stats = (
-            {
-                f: self._file_stats(os.path.join(self.path, f), stats_cols)
-                for f in added
-            }
-            if stats_cols
-            else {}
-        )
-        removed = self.active_files() if mode == "overwrite" else []
-        for _ in range(256):
-            if txn_id in self.committed_txns():
-                # a racer with the same txn won while we were writing;
-                # our data files become unreferenced orphans (harmless,
-                # vacuum-invisible) and the batch is NOT duplicated
-                return None
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": sorted(added),
-                "remove": sorted(removed),
-                "txn": txn_id,
-            }
-            if stats:
-                entry["stats"] = stats
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-                if mode == "overwrite":
-                    removed = self.active_files()
-        raise RuntimeError(
-            f"txlog commit_txn lost the version race 256 times at {self.path}"
-        )
+        return self._commit(df, mode, stats_cols, txn_id=txn_id)
 
     @staticmethod
     def _file_stats(path: str, cols: list[str]) -> dict:
@@ -933,18 +928,10 @@ class TxLogTable:
             "tags": st.tags,
             "pspec": list(st.pspec),
         }
-        tmp = os.path.join(
-            self.log_dir, f".{version}.checkpoint.{uuid.uuid4().hex[:8]}"
+        # a lost race is fine: the racer published the identical state
+        _put_if_absent(
+            os.path.join(self.log_dir, f"{version}.checkpoint.json"), state
         )
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        try:
-            os.link(
-                tmp, os.path.join(self.log_dir, f"{version}.checkpoint.json")
-            )
-        except FileExistsError:
-            pass  # a racer already published the identical checkpoint
-        os.unlink(tmp)
 
     def _latest_checkpoint(self, version: int | None = None) -> dict | None:
         best = None
@@ -1774,32 +1761,8 @@ class TxLogTable:
                 "still carry its bytes under that physical name — "
                 "re-adding would resurrect them"
             )
-        version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": [],
-                "remove": [],
-                "add_column": {name: {"default": default, "type": dtype}},
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog add_column lost the version race 256 times at "
-            f"{self.path}"
+        return self._publish(
+            lambda _v: {"add_column": {name: {"default": default, "type": dtype}}}
         )
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1826,33 +1789,7 @@ class TxLogTable:
                 f"rename_column: {new!r} already exists — renaming "
                 "onto an existing column would shadow it"
             )
-        version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": [],
-                "remove": [],
-                "rename": {old: new},
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog rename_column lost the version race 256 times at "
-            f"{self.path}"
-        )
+        return self._publish(lambda _v: {"rename": {old: new}})
 
     def drop_column(self, name: str) -> int:
         """DROP COLUMN as one metadata commit (the third
@@ -1893,33 +1830,7 @@ class TxLogTable:
                     "(commit_replace over the current snapshot "
                     "materializes the deletes), then drop"
                 )
-        version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": [],
-                "remove": [],
-                "drop_column": [name],
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog drop_column lost the version race 256 times at "
-            f"{self.path}"
-        )
+        return self._publish(lambda _v: {"drop_column": [name]})
 
     def _mor_conflict_check(
         self,
@@ -2189,8 +2100,8 @@ class TxLogTable:
         payload, files_counts, keys_df, _ = self._mor_build_dv(
             spark, snap, matched, key_col, key_phys, st, verb, inline_max
         )
-        version = self._next_version()
-        for _ in range(256):
+
+        def build(_v: int) -> dict:
             # OCC: every DV'd file must still be active at publish time
             # — a concurrent rewrite (compaction / CoW) moved the rows
             # into files this DV doesn't know, and publishing anyway
@@ -2210,31 +2121,9 @@ class TxLogTable:
             self._mor_conflict_check(
                 spark, base_version, key_phys, keys_df, set(files_counts)
             )
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": [],
-                "remove": [],
-                "dv": payload,
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog {verb} lost the version race 256 times at "
-            f"{self.path}"
-        )
+            return {"dv": payload}
+
+        return self._publish(build)
 
     def upsert_mor(
         self,
@@ -2330,25 +2219,11 @@ class TxLogTable:
         # advertises as impossible)
         pdf = self._to_physical(df)
         pdf, auto_add = self._enforce_append_schema(pdf, merge_schema, st)
-        if stats_cols:
-            stats_cols = self._to_physical_names(stats_cols)
-        version = self._next_version()
-        data_dir = os.path.join(self.path, f"v{version}-{uuid.uuid4().hex[:8]}")
-        pdf.write.parquet(data_dir)
-        added = [
-            os.path.join(os.path.basename(data_dir), f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        ]
-        stats = (
-            {
-                f: self._file_stats(os.path.join(self.path, f), stats_cols)
-                for f in added
-            }
-            if stats_cols
-            else {}
+        added, stats = self._write_files(
+            pdf, f"v{self._next_version()}", stats_cols
         )
-        for _ in range(256):
+
+        def build(_v: int) -> dict:
             gone = set(files_counts) - self._fold_state().active
             if gone:
                 raise ValueError(
@@ -2363,12 +2238,7 @@ class TxLogTable:
                 spark, base_version, key_phys, delta_keys,
                 set(files_counts),
             )
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": sorted(added),
-                "remove": [],
-            }
+            entry: dict = {"add": added}
             if payload is not None:
                 entry["dv"] = payload
             if stats:
@@ -2377,24 +2247,9 @@ class TxLogTable:
                 # merge_schema widening rides IN the upsert's atomic
                 # entry, exactly as in commit()
                 entry["add_column"] = auto_add
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog upsert_mor lost the version race 256 times at "
-            f"{self.path}"
-        )
+            return entry
+
+        return self._publish(build)
 
     def version_as_of(self, ts: float) -> int:
         """Resolve `AS OF TIMESTAMP` to a version: the largest version
@@ -2486,35 +2341,7 @@ class TxLogTable:
                 f"{len(missing)} active file(s) were vacuumed (e.g. "
                 f"{missing[0]!r}); a tag cannot resurrect deleted bytes"
             )
-        new_version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": new_version,
-                "ts": time.time(),
-                "add": [],
-                "remove": [],
-                "tag_set": {name: version},
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{new_version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(
-                    tmp, os.path.join(self.log_dir, f"{new_version}.json")
-                )
-                os.unlink(tmp)
-                if (new_version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(new_version)
-                return new_version
-            except FileExistsError:
-                os.unlink(tmp)
-                new_version = self._next_version()
-        raise RuntimeError(
-            f"txlog create_tag lost the version race 256 times at "
-            f"{self.path}"
-        )
+        return self._publish(lambda _v: {"tag_set": {name: version}})
 
     def drop_tag(self, name: str) -> int:
         """Release a tag's retention pin (one metadata commit). The
@@ -2522,32 +2349,7 @@ class TxLogTable:
         passes it — dropping a tag never deletes bytes by itself."""
         if name not in self._fold_state().tags:
             raise ValueError(f"drop_tag: no tag {name!r}")
-        version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": [],
-                "remove": [],
-                "tag_drop": [name],
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog drop_tag lost the version race 256 times at {self.path}"
-        )
+        return self._publish(lambda _v: {"tag_drop": [name]})
 
     def set_partition_spec(self, cols: list[str]) -> int:
         """PARTITION EVOLUTION, verb 1 (Iceberg partition-spec
@@ -2572,33 +2374,7 @@ class TxLogTable:
                     f"column (have {cur})"
                 )
         phys = self._to_physical_names(list(cols))
-        version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": [],
-                "remove": [],
-                "partition_spec": phys,
-            }
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog set_partition_spec lost the version race 256 times "
-            f"at {self.path}"
-        )
+        return self._publish(lambda _v: {"partition_spec": phys})
 
     def partition_spec_history(self) -> list[tuple[int, list[str]]]:
         """(version, [logical cols]) per spec change in the RETAINED
@@ -2680,34 +2456,10 @@ class TxLogTable:
             f: self._file_stats(os.path.join(self.path, f), scols)
             for f in added
         }
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": sorted(added),
-                "remove": [],
-                "stats": stats,
-            }
-            if auto_add:
-                entry["add_column"] = auto_add
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog append_partitioned lost the version race 256 times "
-            f"at {self.path}"
-        )
+        entry = {"add": sorted(added), "stats": stats}
+        if auto_add:
+            entry["add_column"] = auto_add
+        return self._publish(lambda _v: entry)
 
     def stage(self, df: DataFrame) -> list[str]:
         """Write-Audit-Publish step 1 (Iceberg WAP): materialize df's
@@ -2716,16 +2468,7 @@ class TxLogTable:
         log is the source of truth and the log doesn't know them.
         Returns the relative staged paths for `read_staged` /
         `publish_staged` / `discard_staged`."""
-        df = self._to_physical(df)
-        data_dir = os.path.join(
-            self.path, f"staged-{uuid.uuid4().hex[:8]}"
-        )
-        df.write.parquet(data_dir)
-        return sorted(
-            os.path.join(os.path.basename(data_dir), f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
+        return self._write_files(self._to_physical(df), "staged")[0]
 
     def read_staged(self, spark: SparkSession, files: list[str]) -> DataFrame:
         """WAP step 2: the audit surface — read exactly the staged
@@ -2756,45 +2499,11 @@ class TxLogTable:
                 f"publish_staged: {len(missing)} staged file(s) missing "
                 f"(e.g. {missing[0]}) — discarded or never staged"
             )
-        stats = (
-            {
-                f: self._file_stats(
-                    os.path.join(self.path, f),
-                    self._to_physical_names(stats_cols),
-                )
-                for f in files
-            }
-            if stats_cols
-            else {}
-        )
-        version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": sorted(files),
-                "remove": [],
-            }
-            if stats:
-                entry["stats"] = stats
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                if (version + 1) % self.checkpoint_interval == 0:
-                    self._write_checkpoint(version)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog publish_staged lost the version race 256 times at "
-            f"{self.path}"
-        )
+        entry: dict = {"add": sorted(files)}
+        stats = self._entry_stats(files, stats_cols)
+        if stats:
+            entry["stats"] = stats
+        return self._publish(lambda _v: entry)
 
     def _publish_txn_entry(
         self, files: list[str], ref: dict, stats_cols: list[str] | None
@@ -2802,47 +2511,15 @@ class TxLogTable:
         """S48 phase-2 publish: one log entry adding already-staged
         files, gated on the shared txn decision (see
         multi_table_commit). Identical to publish_staged except for
-        the `txn_manifest` reference and NO auto-checkpoint (a
-        checkpoint would just skip itself while the txn is in
-        doubt)."""
-        stats = (
-            {
-                f: self._file_stats(
-                    os.path.join(self.path, f),
-                    self._to_physical_names(stats_cols),
-                )
-                for f in files
-            }
-            if stats_cols
-            else {}
-        )
-        version = self._next_version()
-        for _ in range(256):
-            entry = {
-                "version": version,
-                "ts": time.time(),
-                "add": sorted(files),
-                "remove": [],
-                "txn_manifest": ref,
-            }
-            if stats:
-                entry["stats"] = stats
-            tmp = os.path.join(
-                self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-            )
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            try:
-                os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-                os.unlink(tmp)
-                return version
-            except FileExistsError:
-                os.unlink(tmp)
-                version = self._next_version()
-        raise RuntimeError(
-            f"txlog txn publish lost the version race 256 times at "
-            f"{self.path}"
-        )
+        the `txn_manifest` reference and NO auto-checkpoint (within
+        the txn's `ttl` a checkpoint would just skip itself while the
+        txn is in doubt; past a short `ttl` it would abort this very
+        txn — see _write_checkpoint)."""
+        entry: dict = {"add": sorted(files), "txn_manifest": ref}
+        stats = self._entry_stats(files, stats_cols)
+        if stats:
+            entry["stats"] = stats
+        return self._publish(lambda _v: entry, checkpoint=False)
 
     def discard_staged(self, files: list[str]) -> None:
         """WAP abort: delete staged bytes that failed the audit. Safe
@@ -3128,7 +2805,6 @@ class TxLogTable:
             # one merged sidecar carries every DV pair new since the
             # fork (the clone_from device) — a single dv payload per
             # entry is the fold contract
-            import pyarrow as pa
             import pyarrow.parquet as pq
 
             files_l, keys_l = [], []
@@ -3144,35 +2820,21 @@ class TxLogTable:
                     if fv in live and fv in st_head.active:
                         files_l.append(fv)
                         keys_l.append(kv)
-            rel = os.path.join("_dv", f"{uuid.uuid4().hex[:12]}.parquet")
-            os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
-            pq.write_table(
-                pa.table({"__dv_file": files_l, "__dv_key": keys_l}),
-                os.path.join(self.path, rel),
+            entry["dv"] = _write_dv_sidecar(
+                self.path, files_l, keys_l, st_head.dv_key
             )
-            counts: dict[str, int] = {}
-            for fv in files_l:
-                counts[fv] = counts.get(fv, 0) + 1
-            entry["dv"] = {
-                "key": st_head.dv_key, "sidecar": rel, "files": counts,
-            }
         elif new_inline:
             entry["dv"] = {"key": st_head.dv_key, "files": new_inline}
-        tmp = os.path.join(
-            self.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        try:
-            os.link(tmp, os.path.join(self.log_dir, f"{version}.json"))
-        except FileExistsError:
-            os.unlink(tmp)
+        # one shot, never _publish: a fast-forward that lost its
+        # version cannot retry at the next one
+        if not _put_if_absent(
+            os.path.join(self.log_dir, f"{version}.json"), entry
+        ):
             raise ValueError(
                 f"merge_branch({name!r}): a concurrent main commit took "
                 f"v{version} during the merge — fast-forward lost the "
                 "race; re-examine and retry"
-            ) from None
-        os.unlink(tmp)
+            )
         if (version + 1) % self.checkpoint_interval == 0:
             self._write_checkpoint(version)
         return version
@@ -3285,7 +2947,6 @@ class TxLogTable:
             if st_head.pspec != st_base.pspec:
                 entry["partition_spec"] = list(st_head.pspec)
         if new_side:
-            import pyarrow as pa
             import pyarrow.parquet as pq
 
             files_l, keys_l = [], []
@@ -3301,30 +2962,17 @@ class TxLogTable:
                     if fv in live:
                         files_l.append(fv)
                         keys_l.append(kv)
-            rel = os.path.join("_dv", f"{uuid.uuid4().hex[:12]}.parquet")
-            os.makedirs(os.path.join(self.path, "_dv"), exist_ok=True)
-            pq.write_table(
-                pa.table({"__dv_file": files_l, "__dv_key": keys_l}),
-                os.path.join(self.path, rel),
+            entry["dv"] = _write_dv_sidecar(
+                self.path, files_l, keys_l, st_head.dv_key
             )
-            counts: dict[str, int] = {}
-            for fv in files_l:
-                counts[fv] = counts.get(fv, 0) + 1
-            entry["dv"] = {
-                "key": st_head.dv_key, "sidecar": rel, "files": counts,
-            }
         elif new_dvs:
             entry["dv"] = {
                 "key": st_head.dv_key,
                 "files": {f: sorted(ks) for f, ks in new_dvs.items()},
             }
-        tmp = os.path.join(
-            nbr.log_dir, f".{version}.json.{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        os.link(tmp, os.path.join(nbr.log_dir, f"{version}.json"))
-        os.unlink(tmp)
+        path = os.path.join(nbr.log_dir, f"{version}.json")
+        if not _put_if_absent(path, entry):
+            raise FileExistsError(path)
         return nbr
 
     def drop_branch(self, name: str) -> list[str]:
@@ -3457,16 +3105,11 @@ def _txn_decision(ref: dict) -> str | None:
 def _txn_decide(ref: dict, state: str) -> str:
     """Race-safe single decision: link the decision file put-if-absent;
     the loser reads the winner's state. Returns the DECIDED state."""
-    tmp = _txn_decision_path(ref) + f".{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"state": state, "ts": time.time()}, fh)
-    try:
-        os.link(tmp, _txn_decision_path(ref))
-        os.unlink(tmp)
+    if _put_if_absent(
+        _txn_decision_path(ref), {"state": state, "ts": time.time()}
+    ):
         return state
-    except FileExistsError:
-        os.unlink(tmp)
-        return _txn_decision(ref)  # type: ignore[return-value]
+    return _txn_decision(ref)  # type: ignore[return-value]
 
 
 def multi_table_commit(
@@ -3628,7 +3271,6 @@ def clone_from(
         # merge into it so the clone's v0 carries a single dv payload.
         # Driver-side pyarrow: DV row counts are delta-sized, and the
         # clone verb is a metadata operation by contract.
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         files_l, keys_l = [], []
@@ -3644,23 +3286,12 @@ def clone_from(
                 if fv in live and fv in st.active:
                     files_l.append(os.path.join(source.path, fv))
                     keys_l.append(kv)
-        rel = os.path.join("_dv", f"{uuid.uuid4().hex[:12]}.parquet")
-        os.makedirs(os.path.join(dest.path, "_dv"), exist_ok=True)
-        pq.write_table(
-            pa.table({"__dv_file": files_l, "__dv_key": keys_l}),
-            os.path.join(dest.path, rel),
-        )
-        counts: dict[str, int] = {}
-        for fv in files_l:
-            counts[fv] = counts.get(fv, 0) + 1
-        entry["dv"] = {"key": st.dv_key, "sidecar": rel, "files": counts}
+        entry["dv"] = _write_dv_sidecar(dest.path, files_l, keys_l, st.dv_key)
     elif dvs:
         entry["dv"] = {"key": st.dv_key, "files": dvs}
-    tmp = os.path.join(dest.log_dir, f".0.json.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        json.dump(entry, fh)
-    os.link(tmp, os.path.join(dest.log_dir, "0.json"))
-    os.unlink(tmp)
+    path = os.path.join(dest.log_dir, "0.json")
+    if not _put_if_absent(path, entry):
+        raise FileExistsError(path)
     return dest
 
 

@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from lightcurator_spark.sources.txlog import TxLogTable
@@ -2609,3 +2612,136 @@ def test_fsck_ttl_and_sidecar_classes(spark, tmp_path):
     assert "_dv/deadbeef.parquet" in classes.get("sidecar_orphan", [])
     assert classes.get("sidecar_live"), "MoR sidecar must be live"
     assert t.read_snapshot(spark).count() == 1
+
+
+def test_commit_txn_append_is_schema_enforced(spark, tmp_path):
+    """commit_txn shares commit's append body, so a streaming sink's
+    misspelled column raises instead of forking the footer groups."""
+    t = _mk(spark, tmp_path, [(1, "a")])
+    bad = spark.createDataFrame([(2, "b")], "id long, vv string")
+    with pytest.raises(ValueError, match="schema mismatch"):
+        t.commit_txn(bad, "app/0")
+    assert [e["version"] for e in t.entries()] == [0]
+    assert "app/0" not in t.committed_txns()
+
+
+def _lose_first_race(monkeypatch, racer_extra=None):
+    """Make the first `<v>.json` publish lose its version race: a
+    racer entry (plus `racer_extra`) appears at that name just as the
+    link runs, and the link raises FileExistsError."""
+    import lightcurator_spark.sources.txlog as txlog_mod
+
+    real_link = os.link
+    fired = []
+
+    def link(src, dst):
+        if not fired and re.fullmatch(r"\d+\.json", os.path.basename(dst)):
+            v = int(os.path.basename(dst).split(".")[0])
+            fired.append(v)
+            with open(dst, "w") as fh:
+                json.dump(
+                    {"version": v, "ts": time.time(), "add": [],
+                     "remove": [], **(racer_extra or {})},
+                    fh,
+                )
+            raise FileExistsError(dst)
+        return real_link(src, dst)
+
+    monkeypatch.setattr(txlog_mod.os, "link", link)
+    return fired
+
+
+def _race_rows(spark, rows):
+    return spark.createDataFrame(rows, "id long, v string")
+
+
+def _race_verb(verb, spark, t):
+    """Set `t` up for `verb`; return (call, payload key of its entry)."""
+    from lightcurator_spark.sources.txlog import multi_table_commit
+
+    delta = _race_rows(spark, [(4, "d")])
+    if verb == "commit":
+        return lambda: t.commit(delta), "add"
+    if verb == "commit_replace":
+        victim = t.active_files()[:1]
+        return lambda: t.commit_replace(delta, victim), "remove"
+    if verb == "restore":
+        t.commit(delta)
+        return lambda: t.restore(0), "remove"
+    if verb == "commit_txn":
+        return lambda: t.commit_txn(delta, "app/0"), "txn"
+    if verb == "add_column":
+        return lambda: t.add_column("w", 0, "int"), "add_column"
+    if verb == "rename_column":
+        return lambda: t.rename_column("v", "label"), "rename"
+    if verb == "drop_column":
+        return lambda: t.drop_column("v"), "drop_column"
+    if verb == "delete_mor":
+        return lambda: t.delete_mor(spark, F.col("id") == 1, "id"), "dv"
+    if verb == "upsert_mor":
+        up = _race_rows(spark, [(1, "A")])
+        return lambda: t.upsert_mor(spark, up, "id"), "dv"
+    if verb == "create_tag":
+        return lambda: t.create_tag("pin"), "tag_set"
+    if verb == "drop_tag":
+        t.create_tag("pin")
+        return lambda: t.drop_tag("pin"), "tag_drop"
+    if verb == "set_partition_spec":
+        return lambda: t.set_partition_spec(["v"]), "partition_spec"
+    if verb == "append_partitioned":
+        t.set_partition_spec(["v"])
+        return lambda: t.append_partitioned(spark, delta), "add"
+    if verb == "publish_staged":
+        files = t.stage(delta)
+        return lambda: t.publish_staged(files), "add"
+    assert verb == "multi_table_commit"
+    return lambda: multi_table_commit([(t, delta)])[t.path], "txn_manifest"
+
+
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "commit", "commit_replace", "restore", "commit_txn", "add_column",
+        "rename_column", "drop_column", "delete_mor", "upsert_mor",
+        "create_tag", "drop_tag", "set_partition_spec",
+        "append_partitioned", "publish_staged", "multi_table_commit",
+    ],
+)
+def test_every_publishing_verb_retries_a_lost_version_race(
+    spark, tmp_path, monkeypatch, verb
+):
+    """Every log verb publishes through the one put-if-absent path: a
+    lost race lands the verb at the next version with its payload,
+    keeps the racer's entry, and leaves no temp file behind."""
+    t = _mk(spark, tmp_path, [(1, "a"), (2, "b"), (3, "c")])
+    call, key = _race_verb(verb, spark, t)
+    v = t._next_version()
+    fired = _lose_first_race(monkeypatch)
+    assert call() == v + 1
+    assert fired == [v]
+    racer, mine = t.entries()[-2:]
+    assert (racer["version"], mine["version"]) == (v, v + 1)
+    assert mine[key] and not racer.get(key)
+    assert [f for f in os.listdir(t.log_dir) if f.startswith(".")] == []
+
+
+def test_commit_txn_loses_race_to_same_txn(spark, tmp_path, monkeypatch):
+    """A racer that lands the SAME txn id first wins: the loser re-reads
+    the ledger on retry and returns None instead of double-committing."""
+    t = _mk(spark, tmp_path, [(1, "a")])
+    _lose_first_race(monkeypatch, {"txn": "app/0"})
+    assert t.commit_txn(_race_rows(spark, [(2, "b")]), "app/0") is None
+    assert [e["version"] for e in t.entries()] == [0, 1]
+    assert sorted(r["id"] for r in t.read_snapshot(spark).collect()) == [1]
+    assert [f for f in os.listdir(t.log_dir) if f.startswith(".")] == []
+
+
+def test_put_if_absent_is_the_only_link():
+    """Tripwire: the put-if-absent link lives in `_put_if_absent` alone,
+    so no log verb can hand-roll its own commit loop again."""
+    import inspect
+
+    import lightcurator_spark.sources.txlog as txlog_mod
+
+    assert inspect.getsource(txlog_mod).count("os.link(") == 1
+    assert "os.link(" in inspect.getsource(txlog_mod._put_if_absent)
